@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 /** Machine-readable coverage index: joins the LIVE QueryDef registry
   * (battery entry names + oracle kinds — the authoritative list, not a
   * parse) with COVERAGE.md's operator tables (operator ID → implementation
@@ -18,10 +20,6 @@ package graft
   * registered entry, registered entries cited by no row).
   */
 object Coverage {
-
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\t", "\\t") + "\""
 
   def main(args: Array[String]): Unit = {
     val mdPath = args.headOption.getOrElse("COVERAGE.md")
@@ -83,34 +81,26 @@ object Coverage {
       .distinct.filterNot(byNum.contains).sorted
     val uncited = defs.map(_.name).filterNot(citedBy.contains)
 
-    val sb = new StringBuilder
-    sb.append("{\n \"generated_by\": \"sbt runMain graft.Coverage\",\n")
-    sb.append(" \"source\": ").append(jstr(mdPath)).append(",\n")
-    sb.append(" \"queries\": {\n")
-    sb.append(defs.map { q =>
-      val ops = citedBy.getOrElse(q.name, Nil)
-      s"""  ${jstr(q.name)}: {"check": ${jstr(oracleKind(q.name))}, """ +
-        s""""operators": [${ops.map(jstr).mkString(", ")}]}"""
-    }.mkString(",\n"))
-    sb.append("\n },\n \"operators\": [\n")
-    sb.append(opRows.map { r =>
-      val cells = r.header.zipAll(r.cells, "col", "")
-        .map { case (h, c) => s"${jstr(h)}: ${jstr(c)}" }.mkString(", ")
-      s"""  {"id": ${jstr(r.id)}, "section": ${jstr(r.section)}, """ +
-        s""""queries": [${r.queries.map(jstr).mkString(", ")}], $cells}"""
-    }.mkString(",\n"))
-    sb.append("\n ],\n \"counts\": {\n")
-    sb.append(s"""  "battery_entries": ${defs.size},\n""")
-    sb.append(s"""  "with_oracle": ${defs.count(_.oracle.isDefined)},\n""")
-    sb.append(s"""  "rows_only": ${defs.count(_.oracle.isEmpty)},\n""")
-    sb.append(s"""  "operator_rows": ${opRows.size},\n""")
-    sb.append(s"""  "entries_cited_by_coverage": ${citedBy.size},\n""")
-    sb.append(s"""  "entries_uncited": ${uncited.size},\n""")
-    sb.append(s"""  "uncited_names": [${uncited.map(jstr).mkString(", ")}],\n""")
-    sb.append(s"""  "unresolved_qrefs": [${unresolvedRefs.mkString(", ")}]\n""")
-    sb.append(" }\n}\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      sb.toString.getBytes("UTF-8"))
+    val coverage = ListMap(
+      "generated_by" -> "sbt runMain graft.Coverage",
+      "source" -> mdPath,
+      "queries" -> ListMap(defs.map(q => q.name -> ListMap(
+        "check" -> oracleKind(q.name),
+        "operators" -> citedBy.getOrElse(q.name, Nil))): _*),
+      "operators" -> opRows.map(r => ListMap[String, Any](
+        "id" -> r.id, "section" -> r.section, "queries" -> r.queries) ++
+        r.header.zipAll(r.cells, "col", "")),
+      "counts" -> ListMap(
+        "battery_entries" -> defs.size,
+        "with_oracle" -> defs.count(_.oracle.isDefined),
+        "rows_only" -> defs.count(_.oracle.isEmpty),
+        "operator_rows" -> opRows.size,
+        "entries_cited_by_coverage" -> citedBy.size,
+        "entries_uncited" -> uncited.size,
+        "uncited_names" -> uncited,
+        "unresolved_qrefs" -> unresolvedRefs))
+    Harness.json.writerWithDefaultPrettyPrinter()
+      .writeValue(new java.io.File(outPath), coverage)
     println(s"coverage.json: ${defs.size} entries " +
       s"(${defs.count(_.oracle.isDefined)} oracle / " +
       s"${defs.count(_.oracle.isEmpty)} rows-only), ${opRows.size} " +

@@ -2,56 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.functions.{DamerauLevenshtein, FloatCosine, FloatDot, JaroWinkler, NfcNormalize, PorterStem, TokenLcs, TokenNgramClip}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension registration: makes graft's native expressions
   * available to pure-SQL users at session construction, with no code call —
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * // or: SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * // or: a session builder's .withExtensions(new GraftExtensions)
   * }}}
   * (Programmatic alternative: `graft.functions.registerAll(spark)`.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("porter_stem"),
-      new ExpressionInfo(classOf[PorterStem].getName, "porter_stem"),
-      (exprs: Seq[Expression]) => graft.functions.buildPorterStem(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "float_dot"),
-      (exprs: Seq[Expression]) => graft.functions.buildFloatDot(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => graft.functions.buildNfcNormalize(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("float_cosine"),
-      new ExpressionInfo(classOf[FloatCosine].getName, "float_cosine"),
-      (exprs: Seq[Expression]) => graft.functions.buildFloatCosine(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[Expression]) => graft.functions.buildJaroWinkler(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("damerau_levenshtein"),
-      new ExpressionInfo(classOf[DamerauLevenshtein].getName,
-        "damerau_levenshtein"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.buildDamerauLevenshtein(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("token_lcs"),
-      new ExpressionInfo(classOf[TokenLcs].getName, "token_lcs"),
-      (exprs: Seq[Expression]) => graft.functions.buildTokenLcs(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("token_ngram_clip"),
-      new ExpressionInfo(classOf[TokenNgramClip].getName,
-        "token_ngram_clip"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.buildTokenNgramClip(exprs)))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    graft.functions.sqlFunctions.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name), build))
+    }
 }

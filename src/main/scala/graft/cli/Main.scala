@@ -27,15 +27,7 @@ object Main {
     if (args.isEmpty) { System.err.println(usage); sys.exit(2) }
     val cmd = args.head
     val opts = parseOpts(args.tail)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-$cmd")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(s"graft-$cmd")
     try run(cmd, opts, spark)
     catch {
       case e: IllegalArgumentException =>
@@ -158,7 +150,7 @@ object Main {
   }
 
   private val usage: String =
-    """usage: graft.cli.Main <counts|associate|vectors|classify|pipeline> [options]
+    """usage: graft.cli.Main <counts|associate|vectors|classify|pipeline|curate> [options]
       |  counts    --corpus FILE --out DIR [--format parquet|text]
       |  associate --corpus FILE --out DIR [--format parquet|text]
       |  vectors   --corpus FILE --gold FILE --out DIR [--faithful]

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.types.IntegerType
 
 /** Column-level entry points for graft's native expressions. */
 package object functions {
@@ -84,93 +85,41 @@ package object functions {
       token: String): Column =
     toColumn(MultiReplace(toExpr(text), patterns, token))
 
+  /** Every SQL-callable graft function: name and arity-checked builder.
+    * The one list behind both [[registerAll]] and [[graft.GraftExtensions]].
+    */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] =
+    Seq(
+      sql("porter_stem", 1)(e => PorterStem(e(0))),
+      sql("float_dot", 2)(e => FloatDot(e(0), e(1))),
+      sql("nfc_normalize", 1)(e => NfcNormalize(e(0))),
+      sql("float_cosine", 2)(e => FloatCosine(e(0), e(1))),
+      sql("jaro_winkler", 2)(e => JaroWinkler(e(0), e(1))),
+      sql("damerau_levenshtein", 2)(e => DamerauLevenshtein(e(0), e(1))),
+      sql("token_lcs", 2)(e => TokenLcs(e(0), e(1))),
+      sql("token_ngram_clip", 3)(e => TokenNgramClip(e(0), e(1), e(2))),
+      sql("hilbert_index", 3)(e => HilbertIndex(e(0), e(1), e(2) match {
+        case b if b.foldable && b.dataType == IntegerType =>
+          b.eval().asInstanceOf[Int]
+        case b => throw new IllegalArgumentException(
+          s"hilbert_index: bits must be an int literal, got $b")
+      })))
+
+  private def sql(name: String, arity: Int)(
+      build: Seq[Expression] => Expression)
+      : (String, Seq[Expression] => Expression) =
+    name -> { exprs =>
+      require(exprs.length == arity, s"$name requires exactly $arity " +
+        s"argument${if (arity == 1) "" else "s"}, got ${exprs.length}")
+      build(exprs)
+    }
+
   /** Register graft SQL functions on a session (idempotent), enabling
     * `SELECT porter_stem(col)` in `spark.sql`.
     */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "porter_stem", exprs => buildPorterStem(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => buildFloatDot(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => buildNfcNormalize(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_cosine", exprs => buildFloatCosine(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => buildJaroWinkler(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "damerau_levenshtein",
-      exprs => buildDamerauLevenshtein(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_lcs", exprs => buildTokenLcs(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_ngram_clip", exprs => buildTokenNgramClip(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_index", exprs => buildHilbertIndex(exprs), "scala_udf")
-  }
-
-  private[graft] def buildHilbertIndex(
-      exprs: Seq[Expression]): HilbertIndex = {
-    require(exprs.length == 3,
-      s"hilbert_index requires exactly 3 arguments, got ${exprs.length}")
-    val bits = exprs(2) match {
-      case e if e.foldable &&
-          e.dataType == org.apache.spark.sql.types.IntegerType =>
-        e.eval().asInstanceOf[Int]
-      case e => throw new IllegalArgumentException(
-        s"hilbert_index: bits must be an int literal, got $e")
+  def registerAll(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, build, "scala_udf")
     }
-    HilbertIndex(exprs(0), exprs(1), bits)
-  }
-
-  private[graft] def buildPorterStem(exprs: Seq[Expression]): PorterStem = {
-    require(exprs.length == 1,
-      s"porter_stem requires exactly 1 argument, got ${exprs.length}")
-    PorterStem(exprs.head)
-  }
-
-  private[graft] def buildFloatDot(exprs: Seq[Expression]): FloatDot = {
-    require(exprs.length == 2,
-      s"float_dot requires exactly 2 arguments, got ${exprs.length}")
-    FloatDot(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildNfcNormalize(exprs: Seq[Expression]): NfcNormalize = {
-    require(exprs.length == 1,
-      s"nfc_normalize requires exactly 1 argument, got ${exprs.length}")
-    NfcNormalize(exprs.head)
-  }
-
-  private[graft] def buildFloatCosine(exprs: Seq[Expression]): FloatCosine = {
-    require(exprs.length == 2,
-      s"float_cosine requires exactly 2 arguments, got ${exprs.length}")
-    FloatCosine(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildJaroWinkler(exprs: Seq[Expression]): JaroWinkler = {
-    require(exprs.length == 2,
-      s"jaro_winkler requires exactly 2 arguments, got ${exprs.length}")
-    JaroWinkler(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildDamerauLevenshtein(
-      exprs: Seq[Expression]): DamerauLevenshtein = {
-    require(exprs.length == 2,
-      s"damerau_levenshtein requires exactly 2 arguments, got " +
-        s"${exprs.length}")
-    DamerauLevenshtein(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildTokenLcs(exprs: Seq[Expression]): TokenLcs = {
-    require(exprs.length == 2,
-      s"token_lcs requires exactly 2 arguments, got ${exprs.length}")
-    TokenLcs(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildTokenNgramClip(
-      exprs: Seq[Expression]): TokenNgramClip = {
-    require(exprs.length == 3,
-      s"token_ngram_clip requires exactly 3 arguments, got ${exprs.length}")
-    TokenNgramClip(exprs(0), exprs(1), exprs(2))
-  }
 }

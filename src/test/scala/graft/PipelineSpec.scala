@@ -79,22 +79,6 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("single-UDAF aggregator ≡ wide-expression aggregation (corrected mode)") {
-    val assoc = SemanticPipeline.associations(spark, corpusPath)
-    val gold = PairVectors.parseGold(spark.read.text(goldPath))
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
-      (r.getAs[String]("w1"), r.getAs[String]("w2"), r.getAs[Boolean]("related")) ->
-        PairVectors.vectorColumns.map(c => r.getAs[Double](c)).toArray
-    }.toMap
-    val wide = toMap(PairVectors.vectors(assoc, gold))
-    val udafV = toMap(PairVectors.vectorsViaAggregator(assoc, gold))
-    assert(wide.keySet == udafV.keySet)
-    for ((k, w) <- wide; i <- 0 until 24) {
-      assert(relClose(udafV(k)(i), w(i)),
-        s"$k dim $i: udaf ${udafV(k)(i)} wide ${w(i)}")
-    }
-  }
-
   test("vectors on a word-relatedness slice produce sane similarity identities") {
     // gold pairs of a word with itself: cosine == 1, jaccard == 1, js == 0
     // for every measure (corrected mode), provided the word has features.

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the test tables and compare (rows, schema-by-name, values) with
-the parquet results Verify.scala dumped.
+the parquet results graft.Verify dumped.
 
 Usage: python3 tools/check_oracles.py <sfDir> <verifyOutDir> [queryName...]
 

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Spark-vs-Spark equivalence gate for optimization work: compare two
-Verify.scala dump directories (before/after a plan change) cell-exactly.
+graft.Verify dump directories (before/after a plan change) cell-exactly.
 
 Usage: python3 tools/compare_dumps.py <beforeDir> <afterDir> [queryName...]
 
